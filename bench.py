@@ -3,7 +3,8 @@
 
 Runs every catalog query from ``dq.queries`` against
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]``, then the north-rule pipeline
+``local[$SPARK_GRAFT_CPUS]`` (default: the detected core count), then
+the north-rule pipeline
 (heuristics + langid + perplexity + dedup + scrub + lineage/metrics)
 over a deterministic synthetic ``webpages`` corpus (BASELINE.json
 input_hint shape; generation is materialized to parquet first so the
@@ -32,7 +33,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from dq.pipeline import run_pipeline  # noqa: E402
 from dq.queries import QUERIES  # noqa: E402
-from dq.session import catalog_session, get_spark  # noqa: E402
+from dq.session import (  # noqa: E402
+    catalog_session, default_cpus, get_spark)
 from dq.synth import webpages  # noqa: E402
 
 PIPELINE_DOCS = int(os.environ.get("DQ_BENCH_DOCS", "100000"))
@@ -112,7 +114,7 @@ def bench_pipeline(spark, reps: int = int(os.environ.get("DQ_BENCH_REPS", "2"))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     probe_before = host_probe()
     spark = get_spark("bench", master=f"local[{cpus}]",

@@ -28,7 +28,11 @@ Write disciplines:
 
 Distributed writes — the reference's batched psycopg2 INSERTs
 (batch_size=1000, ``config/settings.py:97``) become executor-parallel
-file commits.
+file commits. The small metric frames the jobs build on the driver
+(check results, freshness, row-count history, checkpoint marks) reach
+these writers as JVM local relations (``dq.session.local_frame``), so a
+write of a few hundred rows runs in the JVM alone, with no Python worker
+in its plan.
 """
 
 from __future__ import annotations

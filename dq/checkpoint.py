@@ -21,6 +21,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dq.audit import AuditStore
+from dq.session import local_frame
+
+CHECKPOINT_SCHEMA = (
+    "scope string, execution_id string, partition_value date, "
+    "status string, completed_at timestamp")
 
 
 def completed_partitions(spark: SparkSession, store: AuditStore,
@@ -56,7 +61,4 @@ def mark_done(spark: SparkSession, store: AuditStore, scope: str,
         return
     rows = [(scope, execution_id, p, "done", completed_at)
             for p in partition_values]
-    df = spark.createDataFrame(
-        rows, "scope string, execution_id string, partition_value date, "
-              "status string, completed_at timestamp")
-    store.append("checkpoint", df)
+    store.append("checkpoint", local_frame(spark, rows, CHECKPOINT_SCHEMA))

@@ -23,7 +23,11 @@ tables through the six checks, then store four metric stages via
    (``utils/helpers.py:13-46``).
 
 Scale shape: each table is one distributed aggregation pass; everything
-the driver holds is per-table scalars. Per-table jobs are independent:
+the driver holds is per-table scalars. The frames built from those
+scalars (results, counts, freshness, history and checkpoint rows) are
+JVM local relations (``dq.session.local_frame``), so the rollups and
+audit writes over them run no Python-worker stage. Per-table jobs are
+independent:
 ``max_concurrent_tables`` submits them from a thread pool (result lists
 are reassembled in spec order, so output is identical to sequential —
 with hundreds of configured tables the cluster otherwise idles between
@@ -53,6 +57,7 @@ from pyspark.sql import functions as F
 from dq import rules, scoring
 from dq.audit import AuditStore
 from dq.compare import compare_row_counts
+from dq.session import local_frame
 from dq.thresholds import Threshold, compute_thresholds, threshold_for
 
 
@@ -63,6 +68,17 @@ class TableSpec:
     table: str
     path: str                          # parquet path / table location
     expected_schema: dict[str, str]
+
+
+CHECKPOINT_TABLES_SCHEMA = (
+    "execution_id string, environment string, database_name string, "
+    "table_name string, status string, completed_at timestamp")
+ROW_COUNT_HISTORY_SCHEMA = (
+    "execution_id string, execution_timestamp timestamp, "
+    "environment string, database_name string, table_name string, "
+    "row_count long")
+_AUDIT_KEYS_SCHEMA = (
+    "environment string, database_name string, table_name string")
 
 
 def completed_tables(spark: SparkSession, store: AuditStore,
@@ -83,10 +99,10 @@ def _mark_tables_done(spark: SparkSession, store: AuditStore,
                       completed_at: dt.datetime) -> None:
     if not keys:
         return
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [(execution_id, e, d, t, "done", completed_at) for e, d, t in keys],
-        "execution_id string, environment string, database_name string, "
-        "table_name string, status string, completed_at timestamp")
+        CHECKPOINT_TABLES_SCHEMA)
     store.overwrite_partitions("checkpoint_tables", df, ["execution_id"])
 
 
@@ -160,8 +176,8 @@ def _carry_forward(spark: SparkSession, store: AuditStore,
     carried_df = None
     prev = store.read(spark, "check_results")
     if prev is not None:
-        kdf = spark.createDataFrame(
-            keys, "environment string, database string, table string")
+        kdf = local_frame(
+            spark, keys, "environment string, database string, table string")
         rows = (
             prev.filter(F.col("execution_id") == execution_id)
                 .filter(F.col("test_name") != "row_count_comparison")
@@ -170,13 +186,11 @@ def _carry_forward(spark: SparkSession, store: AuditStore,
                 .select(*[f.name for f in scoring.RESULT_SCHEMA.fields])
                 .collect())
         if rows:
-            carried_df = spark.createDataFrame(rows, scoring.RESULT_SCHEMA)
+            carried_df = local_frame(spark, rows, scoring.RESULT_SCHEMA)
     counts: list[tuple[str, str, str, int]] = []
     hist = store.read(spark, "row_count_history")
     if hist is not None:
-        hdf = spark.createDataFrame(
-            keys,
-            "environment string, database_name string, table_name string")
+        hdf = local_frame(spark, keys, _AUDIT_KEYS_SCHEMA)
         counts = [
             (r[0], r[1], r[2], int(r[3]))
             for r in (hist.filter(F.col("execution_id") == execution_id)
@@ -187,9 +201,7 @@ def _carry_forward(spark: SparkSession, store: AuditStore,
     fresh_df = None
     fresh = store.read(spark, "freshness")
     if fresh is not None:
-        fdf = spark.createDataFrame(
-            keys,
-            "environment string, database_name string, table_name string")
+        fdf = local_frame(spark, keys, _AUDIT_KEYS_SCHEMA)
         frows = (fresh.filter(F.col("execution_id") == execution_id)
                  .join(F.broadcast(fdf),
                        ["environment", "database_name", "table_name"])
@@ -197,7 +209,7 @@ def _carry_forward(spark: SparkSession, store: AuditStore,
                            FRESHNESS_SCHEMA.split(", ")])
                  .collect())
         if frows:
-            fresh_df = spark.createDataFrame(frows, FRESHNESS_SCHEMA)
+            fresh_df = local_frame(spark, frows, FRESHNESS_SCHEMA)
     return carried_df, counts, fresh_df
 
 
@@ -285,9 +297,9 @@ def run_checks_job(
     # 2. DEV↔PROD comparison over the tiny accumulated counts
     comparison_df = None
     if counts:
-        counts_df = spark.createDataFrame(
-            counts, "environment string, database string, table string, "
-                    "row_count long")
+        counts_df = local_frame(
+            spark, counts, "environment string, database string, "
+                           "table string, row_count long")
         comparison_df = compare_row_counts(counts_df)
         comp_rows = [
             {"environment": "DEV", "database": r["database"],
@@ -331,7 +343,7 @@ def run_checks_job(
     # freshly-computed dicts; completed tables' rows come back from the
     # persisted freshness table itself
     frows = freshness_rows(new_results, execution_id, run_ts)
-    fresh_df = (spark.createDataFrame(frows, FRESHNESS_SCHEMA)
+    fresh_df = (local_frame(spark, frows, FRESHNESS_SCHEMA)
                 if frows else None)
     if carried_fresh is not None:
         fresh_df = (carried_fresh if fresh_df is None
@@ -339,11 +351,10 @@ def run_checks_job(
     if fresh_df is not None:
         store.overwrite_partitions("freshness", fresh_df, ekeys)
     if counts:
-        store.overwrite_partitions("row_count_history", spark.createDataFrame(
+        store.overwrite_partitions("row_count_history", local_frame(
+            spark,
             [(execution_id, run_ts, e, d, t, c) for e, d, t, c in counts],
-            "execution_id string, execution_timestamp timestamp, "
-            "environment string, database_name string, table_name string, "
-            "row_count long"), ["execution_id", "table_name"])
+            ROW_COUNT_HISTORY_SCHEMA), ["execution_id", "table_name"])
     # checkpoint rewrite must keep the previously-done marks: the
     # overwrite is execution_id-keyed, so writing only the new keys
     # would erase resume state for the completed tables

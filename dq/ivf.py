@@ -46,6 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dq.session import local_frame
 from dq.similarity import (
     _collect_queries,
     _emit,
@@ -211,7 +212,7 @@ def ivf_topk(spark, path: str, queries: DataFrame, k: int = 5,
     q_pdf = _collect_queries(queries, query_id_col, vec_col,
                              max_queries, "ivf_topk")
     if len(q_pdf) == 0:
-        return spark.createDataFrame([], out_schema + ", rank int")
+        return local_frame(spark, [], out_schema + ", rank int")
     qids = q_pdf["qid"].to_numpy()
     qmat = _stack(q_pdf["qv"])
     qnorm = np.linalg.norm(qmat, axis=1)

@@ -33,6 +33,7 @@ from dq import dedup, similarity, textstats
 from dq.heuristics import RULE_NAMES, with_heuristics
 from dq.models import make_langid_udf, make_perplexity_udf
 from dq.scrub import scrub_udf
+from dq.session import local_frame
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
@@ -406,7 +407,8 @@ def q_table_checks(spark, sf_dir):
     results = rules.run_all_checks(
         d, "testdb", "documents", expected,
         run_date=dt.date.fromisoformat(RUN_DATE))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r["test_name"], r["passed"], r["dimension"]) for r in results],
         "test_name string, passed boolean, dimension string")
 
@@ -455,10 +457,11 @@ def q_test_type_stats(spark, sf_dir):
     without_di = {"doc_id": "bigint", "text": "string", "lang": "string"}
     schema = "test_name string, passed boolean"
     frames = [
-        spark.createDataFrame([(r["test_name"], r["passed"]) for r in
-                               rules.run_all_checks(d, "testdb", scope, exp,
-                                                    run_date=run_date)],
-                              schema)
+        local_frame(spark,
+                    [(r["test_name"], r["passed"]) for r in
+                     rules.run_all_checks(d, "testdb", scope, exp,
+                                          run_date=run_date)],
+                    schema)
         for scope, exp in [("documents", with_di),
                            ("documents2", without_di)]]
     # SO2 result-list merge (reference utils/helpers.py:159-172): the

@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dq.session import local_frame
+
 DEFAULT_THRESHOLDS = {"critical": 50.0, "high": 70.0, "medium": 85.0, "low": 95.0}
 TABLE_THRESHOLDS = {
     "tva_due": {"critical": 80.0, "high": 90.0, "medium": 95.0, "low": 98.0},
@@ -41,7 +43,7 @@ RESULT_SCHEMA = T.StructType([
 
 def results_to_df(spark: SparkSession, results: list[dict]) -> DataFrame:
     rows = [tuple(r.get(f.name) for f in RESULT_SCHEMA.fields) for r in results]
-    return spark.createDataFrame(rows, RESULT_SCHEMA)
+    return local_frame(spark, rows, RESULT_SCHEMA)
 
 
 def _band(score: Column, thresholds: dict[str, float]) -> Column:

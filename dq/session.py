@@ -21,9 +21,22 @@ a real multi-executor cluster:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 from contextlib import contextmanager
+from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` when set, else the cores this process may run
+    on (its affinity mask where the OS exposes one)."""
+    if os.environ.get("SPARK_GRAFT_CPUS"):
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
 
 
 def get_spark(
@@ -34,15 +47,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the singleton SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32 in the sandbox)
-    — but ONLY when the process was not launched by spark-submit. Under
-    spark-submit the py4j gateway JVM already exists (marked by
-    ``PYSPARK_GATEWAY_PORT`` in the environment) and carries the
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (the detected core
+    count when unset) — but ONLY when the process was not launched by
+    spark-submit. Under spark-submit the py4j gateway JVM already exists
+    (marked by ``PYSPARK_GATEWAY_PORT`` in the environment) and carries the
     ``--master`` the operator chose (YARN/K8s/standalone); forcing
     ``.master()`` here would silently override it back to local mode, so
     we leave it untouched unless the caller passed one explicitly.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     submitted = "PYSPARK_GATEWAY_PORT" in os.environ
     if master is None and not submitted:
         master = f"local[{cpus}]"
@@ -51,7 +64,7 @@ def get_spark(
     # values override spark-submit --conf at getOrCreate, so under
     # spark-submit we read the JVM-side conf first and only fill the
     # holes — an operator's `--conf spark.sql.shuffle.partitions=2000`
-    # on a 1000-executor cluster must win over the sandbox's 32.
+    # on a 1000-executor cluster must win over the local default.
     # Explicit function arguments (shuffle_partitions, extra_conf)
     # still override everything: the caller asked for them by name.
     existing: dict[str, str] = {}
@@ -120,6 +133,34 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Any],
+                schema: StructType | str) -> DataFrame:
+    """A frame over driver-built rows (tuples, dicts or ``Row`` s) that
+    the JVM holds as a local relation (plan leaf ``LocalTableScan``).
+
+    ``spark.createDataFrame(<list>, schema)`` instead parallelizes the
+    rows as a Python RDD (leaf ``Scan ExistingRDD``): every action on the
+    frame, and on anything built from it, reruns a Python-worker stage
+    over ``defaultParallelism`` tasks — seconds of task time for a few
+    hundred audit rows. Here each row goes through the schema's own
+    ``toInternal`` (the list path's conversion), so timestamps are the
+    same instants (naive datetimes read in the process time zone) and
+    dates the same days; the columns are then handed over as one Arrow
+    table, with timestamps as UTC microseconds and dates as ``date32``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    arrow_schema = to_arrow_schema(schema)
+    columns = [pa.array([r[i] for r in internal], type=field.type)
+               for i, field in enumerate(arrow_schema)]
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 # Confs the query catalog pins on the session it is given (see

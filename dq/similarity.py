@@ -37,6 +37,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dq.session import local_frame
+
 
 def _to_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -146,7 +148,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     out_schema = _out_schema(queries, query_id_col,
                              corpus.schema[id_col].dataType.simpleString())
     if len(q_pdf) == 0:
-        return spark.createDataFrame([], out_schema + ", rank int")
+        return local_frame(spark, [], out_schema + ", rank int")
     qids = q_pdf["qid"].to_numpy()
     qmat = _stack(q_pdf["qv"])
     qnorm = np.linalg.norm(qmat, axis=1)
@@ -406,8 +408,8 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
             q_pdf = q_pdf[np.isfinite(norms) & (norms > 0)] \
                 .reset_index(drop=True)
         if len(q_pdf) == 0:
-            return corpus.sparkSession.createDataFrame(
-                [], out_schema + ", rank int")
+            return local_frame(corpus.sparkSession, [],
+                               out_schema + ", rank int")
         return _lsh_topk_broadcast(corpus, q_pdf, k, id_col, vec_col,
                                    planes, bands, out_schema)
     # banded equi-join over KEYS ONLY (id + band key per row); the
@@ -493,7 +495,7 @@ def lsh_index_topk(spark, path: str, queries: DataFrame, k: int = 5,
     q_pdf = _collect_queries(queries, query_id_col, vec_col,
                              100_000, "lsh_index_topk")
     if len(q_pdf) == 0:
-        return spark.createDataFrame([], out_schema + ", rank int")
+        return local_frame(spark, [], out_schema + ", rank int")
     qmat = _stack(q_pdf["qv"])
     qsig = (((qmat @ pmat.T) >= 0).astype(np.uint64)
             * weights[None, :]).sum(axis=1)

@@ -44,11 +44,23 @@ def parse_args(argv):
     return p.parse_args(argv)
 
 
+def pipeline_config(args):
+    """The run's ``PipelineConfig``; an omitted ``--ppl-threshold`` means
+    the library default, an explicit 0 is kept."""
+    from dq.models import DEFAULT_PPL_THRESHOLD
+    from dq.pipeline import PipelineConfig
+    return PipelineConfig(
+        accept_langs=tuple(args.accept_langs.split(",")),
+        ppl_threshold=(DEFAULT_PPL_THRESHOLD if args.ppl_threshold is None
+                       else args.ppl_threshold),
+        repartition=args.repartition,
+    )
+
+
 def main(argv=None) -> int:
     args = parse_args(argv or sys.argv[1:])
     from dq.audit import AuditStore
-    from dq.models import DEFAULT_PPL_THRESHOLD
-    from dq.pipeline import PipelineConfig, run_pipeline
+    from dq.pipeline import run_pipeline
     from dq.session import get_spark
 
     spark = get_spark("dq-quality-filter")
@@ -61,11 +73,7 @@ def main(argv=None) -> int:
     except Exception:  # noqa: BLE001
         pass
     run_date = dt.date.fromisoformat(args.run_date)
-    cfg = PipelineConfig(
-        accept_langs=tuple(args.accept_langs.split(",")),
-        ppl_threshold=args.ppl_threshold or DEFAULT_PPL_THRESHOLD,
-        repartition=args.repartition,
-    )
+    cfg = pipeline_config(args)
     pages = spark.read.parquet(args.input)
     store = AuditStore(args.audit)
     out = run_pipeline(

@@ -4,6 +4,7 @@ drifts dead."""
 
 from pyspark.sql import functions as F
 
+import dq
 from dq import dedup, multimodal, schemas, scrub
 
 
@@ -67,3 +68,42 @@ def test_column_form_wrappers(spark):
     # wrappers mirror the underlying callables exactly
     assert out["clean"] == scrub.scrub_string(
         "alpha beta gamma delta contact a@b.co now")
+
+
+def test_driver_frames_go_through_local_frame():
+    """Every driver-built frame in ``dq`` goes through
+    ``dq.session.local_frame``: a ``createDataFrame`` call anywhere else
+    would bring back the Python-RDD scan it exists to avoid."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(dq.__file__).parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+
+        def visit(node, scope):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                scope = node.name
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"
+                    and not (path.name == "session.py"
+                             and scope == "local_frame")):
+                offenders.append(f"{path.name}:{node.lineno} in {scope}")
+            for child in ast.iter_child_nodes(node):
+                visit(child, scope)
+
+        visit(tree, "<module>")
+    assert offenders == []
+
+
+def test_default_cpus_follows_the_host(monkeypatch):
+    import os
+
+    from dq.session import default_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3

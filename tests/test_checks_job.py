@@ -256,3 +256,27 @@ def test_stale_freshness_fails(spark, tmp_path):
     rows = store.read(spark, "freshness").collect()
     assert rows[0]["passed"] is False
     assert rows[0]["date_difference_days"] == -2
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_audit_frames_are_jvm_local_relations(spark, tmp_path, specs):
+    """Driver-built result frames must not scan a Python RDD: an
+    ``ExistingRDD`` leaf reruns a Python-worker stage on every action,
+    i.e. on every audit write and rollup built from the frame. Checked
+    on a first run and on a partial rerun that carries rows forward."""
+    store = AuditStore(str(tmp_path / "audit"))
+    first = run_checks_job(spark, specs, "e1", RUN_DATE, store)
+    extra = str(tmp_path / "dev_t9")
+    _write_table(spark, extra, 30)
+    rerun = run_checks_job(
+        spark, specs + [TableSpec("DEV", "db1", "t9", extra, SCHEMA)],
+        "e1", RUN_DATE, store)
+    for out in (first, rerun):
+        for name in ("results_df", "table_summary", "database_summary",
+                     "dimension_scores", "comparison"):
+            plan = _plan(out[name])
+            assert "ExistingRDD" not in plan, (name, plan)
+            assert "LocalTableScan" in plan, (name, plan)

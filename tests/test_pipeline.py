@@ -155,3 +155,26 @@ def test_partial_resume_processes_only_remaining(spark, tmp_path):
             out["scored"].select("partition_value").distinct().collect()}
     assert seen == set(parts) - set(half)
     out["scored"].unpersist()
+
+
+def test_run_job_keeps_explicit_zero_ppl_threshold():
+    """``--ppl-threshold 0`` is a threshold, not "unset"."""
+    import importlib.util
+    from pathlib import Path
+
+    from dq.models import DEFAULT_PPL_THRESHOLD
+
+    path = Path(__file__).resolve().parent.parent / "scripts" / "run_job.py"
+    spec = importlib.util.spec_from_file_location("run_job", path)
+    run_job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(run_job)
+    base = ["--input", "in", "--audit", "audit", "--execution-id", "e1",
+            "--run-date", "2025-10-03"]
+
+    def cfg(*extra):
+        return run_job.pipeline_config(run_job.parse_args(base + list(extra)))
+
+    assert cfg("--ppl-threshold", "0").ppl_threshold == 0.0
+    assert cfg("--ppl-threshold", "250").ppl_threshold == 250.0
+    assert cfg().ppl_threshold == DEFAULT_PPL_THRESHOLD
+    assert isinstance(cfg(), PipelineConfig)
