@@ -53,12 +53,23 @@ SHINGLE_SEP = "␟"        # ␟ — never appears in whitespace-split tokens
 
 # ---------------------------------------------------------------- exact ---
 
-def exact_signature(text: Column, id_col: Column) -> Column:
-    """64-bit signature; NULL/empty text falls back to a per-row value so
-    the null bucket cannot skew the shuffle (they dedup to themselves)."""
+def text_signature(text: Column, key: Column) -> Column:
+    """64-bit exact-dedup signature of a text, shared by batch
+    (:func:`exact_dedup`, hence ``dq.pipeline.score_pages``) and
+    streaming (``dq.streaming.streaming_dedup``); the oracle SQL of
+    ``pipeline_rules_only`` mirrors its null handling.
+
+    NULL/blank text hashes the row's ``key`` with a ``"nulltext"``
+    literal instead: such rows dedup to themselves (rule_non_empty
+    drops them anyway) and cannot pile into one skewed hash bucket.
+    Non-emptiness is tested on the text itself, not through
+    ``rule_non_empty`` (the same boolean: a trimmed non-empty text
+    always splits into at least one token), so the signature depends
+    on no UDF output and column pruning keeps the Arrow scoring stages
+    out of the keeper branch — otherwise they would run twice per doc."""
     return F.when(
         text.isNotNull() & (F.trim(text) != ""), F.xxhash64(text)
-    ).otherwise(F.xxhash64(id_col, F.lit("__null__")))
+    ).otherwise(F.xxhash64(key, F.lit("nulltext")))
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -67,7 +78,7 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
     """Keep the first (smallest-id) row of every exact-duplicate group.
 
     Adds ``is_dup_copy`` (True = shadowed copy). Plan:
-    ``groupBy(signature).agg(min(id))`` + join back — deliberately NOT
+    ``groupBy(text_sig).agg(min(id))`` + join back — deliberately NOT
     ``row_number().over(partitionBy(signature))``: a window must
     colocate every row of a signature in ONE task and window shuffles
     are not skew-splittable by AQE (AQE skew handling applies to joins
@@ -77,8 +88,10 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
     wire regardless of skew) and the join back is AQE-skew-join
     eligible; when the keeper table is small enough AQE turns it into a
     broadcast join with no wide shuffle at all. The keeper side is
-    derived from a narrow (id, sig) projection so column pruning keeps
-    upstream UDF stages out of that branch.
+    derived from a narrow (id, text_sig) projection so column pruning
+    keeps upstream UDF stages out of that branch. The signature column
+    is named ``text_sig`` (profilers find the keeper exchange by it)
+    and dropped on exit.
 
     Requires unique non-null ids (duplicate (signature, id) rows would
     all be marked keepers, where the window form would keep exactly
@@ -95,14 +108,14 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
             raise ValueError(
                 f"exact_dedup requires unique non-null {id_col!r}: "
                 f"{chk['n']} rows but {chk['d']} distinct ids")
-    sig = exact_signature(F.col(text_col), F.col(id_col))
-    df = df.withColumn("_sig", sig)
-    keepers = (df.select(id_col, "_sig")
-               .groupBy("_sig")
+    df = df.withColumn("text_sig",
+                       text_signature(F.col(text_col), F.col(id_col)))
+    keepers = (df.select(id_col, "text_sig")
+               .groupBy("text_sig")
                .agg(F.min(id_col).alias("_keep_id")))
-    return (df.join(keepers, "_sig")
+    return (df.join(keepers, "text_sig")
               .withColumn("is_dup_copy", F.col(id_col) != F.col("_keep_id"))
-              .drop("_sig", "_keep_id"))
+              .drop("text_sig", "_keep_id"))
 
 
 def exact_dup_stats(df: DataFrame, group_cols: list[str],

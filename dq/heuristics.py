@@ -334,9 +334,12 @@ def with_heuristics_expr(df: DataFrame, text_col: str = "text",
     return _with_rules(df, cfg)
 
 
-def heuristic_pass(df: DataFrame) -> Column:
-    """Conjunction of all heuristic rule verdicts."""
-    out = F.col(RULE_NAMES[0])
-    for name in RULE_NAMES[1:]:
+def all_pass(rules: list[str] = RULE_NAMES) -> Column:
+    """Conjunction of the named boolean rule columns — the reference's
+    "passed = all checks passed" verdict, and the ONE keep expression
+    of the batch and streaming scorers (``dq.pipeline.score_pages``,
+    ``dq.streaming.score_stream``)."""
+    out = F.col(rules[0])
+    for name in rules[1:]:
         out = out & F.col(name)
     return out

@@ -335,7 +335,7 @@ class LangIdModel:
             d1 = int(np.searchsorted(off, a + _LANGID_CHUNK, "right")) - 1
             d1 = max(d1, d0 + 1)
             d1 = min(d1, nvalid)
-            b = off[d1] if d1 < k + 1 else B
+            b = off[d1]                  # d1 <= nvalid <= k
             Bc = int(b - a)
             d0_next = d1
             if Bc == 0:
@@ -598,7 +598,7 @@ class NGramLM:
             pad[:Bc] = low
             pad[Bc:Bc + 16] = 0
             win = np.ndarray(shape=(Bc + 9,), dtype=">u8",
-                             buffer=_SCRATCH["ppl_pad"].data, strides=(1,))
+                             buffer=pad, strides=(1,))
             key1 = win[starts] & _KEY_MASKS[np.minimum(tlens, 8)]
             key2 = np.zeros(n_sel, dtype=np.uint64)
             long_tok = np.flatnonzero(tlens > 8)

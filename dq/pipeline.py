@@ -1,12 +1,23 @@
-"""The end-to-end web-text quality-filter pipeline.
+"""The end-to-end web-text quality-filter pipeline, and the one scoring
+core that the streaming path (``dq.streaming``) shares.
 
 North-rule composition (BASELINE.json): heuristic rules (native Column
 expressions) + langid + perplexity (broadcast-model pandas UDFs) + exact
-dedup (hash-signature window) → keep/drop = conjunction of rule verdicts
-(mirroring the reference's "passed = all checks passed",
+dedup (hash-signature keeper join) → keep/drop = conjunction of rule
+verdicts (mirroring the reference's "passed = all checks passed",
 ``main.py:188-208``) → compiled-regex PII scrub of kept docs → audit
 writes (per-url lineage, per-partition rule metrics, row-count history)
 → checkpoint mark-done.
+
+Each scoring decision is defined once and called by batch and streaming
+alike:
+- :func:`score_rules` — heuristics, then the model scores, then the
+  model verdicts (or unconditional passes with model rules disabled);
+- ``dq.dedup.text_signature`` / ``dq.dedup.exact_dedup`` — the exact
+  dedup signature and its keeper exchange;
+- ``dq.heuristics.all_pass`` — the keep conjunction;
+- :func:`rule_tallies` — the ``pass__<rule>``/``total``/``kept``
+  aggregates behind ``rule_metrics`` and the streaming window metrics.
 
 Scale shape (the plan at 100 TB):
 - one scan of the input; heuristics + UDF scoring are row-local (no
@@ -26,13 +37,14 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from dq.audit import AuditStore
 from dq.checkpoint import completed_partitions, filter_unprocessed, mark_done
-from dq.heuristics import RULE_NAMES, HeuristicConfig, with_heuristics
+from dq.dedup import exact_dedup
+from dq.heuristics import RULE_NAMES, HeuristicConfig, all_pass, with_heuristics
 from dq.models import DEFAULT_PPL_THRESHOLD, make_langid_udf, make_perplexity_udf
 from dq.scrub import scrub_udf
 
@@ -52,7 +64,44 @@ class PipelineConfig:
     enable_model_rules: bool = True
 
 
-ALL_RULES = RULE_NAMES + ["rule_lang", "rule_ppl", "rule_not_dup"]
+# the row-local rules score_rules adds, then the keeper verdict
+ROW_RULES = RULE_NAMES + ["rule_lang", "rule_ppl"]
+ALL_RULES = ROW_RULES + ["rule_not_dup"]
+
+
+def score_rules(spark: SparkSession, df: DataFrame,
+                cfg: PipelineConfig) -> DataFrame:
+    """Row-local scoring: heuristic stats + verdicts, then ``lang_pred``
+    / ``ppl``, then ``rule_lang`` / ``rule_ppl`` — every ROW_RULES
+    column, no shuffle. Works on batch and streaming frames alike."""
+    df = with_heuristics(df, "text", cfg.heuristics)
+    if cfg.enable_model_rules:
+        langid = make_langid_udf(spark)
+        ppl = make_perplexity_udf(spark)
+        df = df.withColumns({
+            "lang_pred": langid(F.col("text")),
+            "ppl": ppl(F.col("text")),
+        })
+        return df.withColumns({
+            "rule_lang": F.col("lang_pred").isin(*cfg.accept_langs),
+            "rule_ppl": F.col("ppl") <= F.lit(cfg.ppl_threshold),
+        })
+    # rules-only mode: same schema (lineage/metrics melt over ALL_RULES
+    # unchanged), model verdicts pass unconditionally
+    return df.withColumns({
+        "lang_pred": F.lit(None).cast("string"),
+        "ppl": F.lit(None).cast("double"),
+        "rule_lang": F.lit(True),
+        "rule_ppl": F.lit(True),
+    })
+
+
+def rule_tallies(rules: list[str]) -> list[Column]:
+    """Aggregates of a rule-metrics row: ``pass__<rule>`` per rule, then
+    ``total`` and ``kept``."""
+    return ([F.sum(F.col(r).cast("long")).alias(f"pass__{r}") for r in rules]
+            + [F.count(F.lit(1)).alias("total"),
+               F.sum(F.col("keep").cast("long")).alias("kept")])
 
 
 def score_pages(spark: SparkSession, pages: DataFrame,
@@ -63,6 +112,10 @@ def score_pages(spark: SparkSession, pages: DataFrame,
     reads it, and carrying a multi-KB binary through every projection,
     the Arrow UDF boundary, and the dedup shuffle dominates runtime
     (measured 3-10x on the full pipeline) and shuffle volume at scale.
+
+    ``rule_not_dup`` keeps the first url of every exact-duplicate text
+    (``dq.dedup.exact_dedup``). PRECONDITION: urls are unique non-null
+    (Common-Crawl-style inputs guarantee one row per capture url).
     """
     cfg = cfg or PipelineConfig()
     df = pages.drop("html")
@@ -70,62 +123,10 @@ def score_pages(spark: SparkSession, pages: DataFrame,
     if cfg.repartition:
         from dq.skew import salted_repartition
         df = salted_repartition(df, cfg.repartition)
-
-    df = with_heuristics(df, "text", cfg.heuristics)
-
-    if cfg.enable_model_rules:
-        langid = make_langid_udf(spark)
-        ppl = make_perplexity_udf(spark)
-        df = df.withColumns({
-            "lang_pred": langid(F.col("text")),
-            "ppl": ppl(F.col("text")),
-        })
-        df = df.withColumns({
-            "rule_lang": F.col("lang_pred").isin(*cfg.accept_langs),
-            "rule_ppl": F.col("ppl") <= F.lit(cfg.ppl_threshold),
-        })
-    else:
-        # rules-only mode: same schema (lineage/metrics melt over
-        # ALL_RULES unchanged), model verdicts pass unconditionally
-        df = df.withColumns({
-            "lang_pred": F.lit(None).cast("string"),
-            "ppl": F.lit(None).cast("double"),
-            "rule_lang": F.lit(True),
-            "rule_ppl": F.lit(True),
-        })
-
-    # exact dedup: 64-bit signature; keep-first by url within a signature.
-    # PRECONDITION: urls are unique non-null (Common-Crawl-style inputs
-    # guarantee one row per capture url) — a duplicated url carrying its
-    # group's min would be marked keeper more than once; see
-    # dq.dedup.exact_dedup(check_unique=True) for the enforced variant.
-    # Null/empty texts get a unique per-row signature (they are dropped by
-    # rule_non_empty anyway) so the null bucket can't skew the shuffle.
-    # Shape: groupBy(sig).agg(min(url)) + join back, NOT a row_number
-    # window — the agg combines map-side so a pathologically duplicated
-    # text cannot produce a single-task straggler, and the join is
-    # AQE-skew-splittable / broadcastable (see dq.dedup.exact_dedup).
-    # The keeper branch is a narrow (url, sig) projection; the signature
-    # deliberately tests text non-emptiness directly rather than via
-    # rule_non_empty (identical semantics: a non-empty trimmed text
-    # always splits to >=1 token) so the branch carries NO dependency on
-    # the UDF stats column and column pruning keeps the Arrow stages out
-    # of it — otherwise the token/model UDFs would run twice per doc.
-    has_text = F.col("text").isNotNull() & (F.trim(F.col("text")) != "")
-    sig = F.when(has_text, F.xxhash64(F.col("text"))) \
-           .otherwise(F.xxhash64(F.col("url"), F.lit("nulltext")))
-    df = df.withColumn("text_sig", sig)
-    keepers = (df.select("url", "text_sig")
-               .groupBy("text_sig")
-               .agg(F.min("url").alias("_keep_url")))
-    df = (df.join(keepers, "text_sig")
-            .withColumn("rule_not_dup", F.col("url") == F.col("_keep_url"))
-            .drop("_keep_url"))
-
-    keep = F.lit(True)
-    for r in ALL_RULES:
-        keep = keep & F.col(r)
-    return df.withColumn("keep", keep)
+    df = exact_dedup(score_rules(spark, df, cfg), "text", "url")
+    df = (df.withColumn("rule_not_dup", ~F.col("is_dup_copy"))
+            .drop("is_dup_copy"))
+    return df.withColumn("keep", all_pass(ALL_RULES))
 
 
 def melt_lineage(scored: DataFrame, execution_id: str) -> DataFrame:
@@ -145,10 +146,7 @@ def rule_metrics(scored: DataFrame, execution_id: str) -> DataFrame:
     """Per-(partition, rule) pass/fail tallies — ONE aggregation pass over
     the wide frame (no melt shuffle): sums of boolean casts per rule, then
     unpivot of the already-tiny aggregate."""
-    aggs = [F.sum(F.col(r).cast("long")).alias(f"pass__{r}") for r in ALL_RULES]
-    aggs.append(F.count(F.lit(1)).alias("total"))
-    aggs.append(F.sum(F.col("keep").cast("long")).alias("kept"))
-    wide = scored.groupBy("partition_value").agg(*aggs)
+    wide = scored.groupBy("partition_value").agg(*rule_tallies(ALL_RULES))
     stack_expr = "stack({}, {}) as (rule_name, passed_count)".format(
         len(ALL_RULES),
         ", ".join(f"'{r}', pass__{r}" for r in ALL_RULES))

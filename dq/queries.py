@@ -30,8 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dq import dedup, similarity, textstats
-from dq.heuristics import RULE_NAMES, with_heuristics
-from dq.models import make_langid_udf, make_perplexity_udf
+from dq.heuristics import RULE_NAMES, HeuristicConfig, with_heuristics
 from dq.scrub import scrub_udf
 from dq.session import local_frame
 
@@ -1491,21 +1490,23 @@ FROM scored QUALIFY rank <= {k}
 """
 
 
+# The flagship's heuristic thresholds, shared by ``flagship_scored`` and
+# ``q_pipeline_rules_only`` (ORACLE_PIPELINE_RULES spells them as SQL).
+FLAGSHIP_HEURISTICS = HeuristicConfig(min_words=30, min_stopword_frac=0.0,
+                                      min_mean_word_len=2.0)
+
+
 def flagship_scored(spark, sf_dir):
     """The flagship's scored frame (``score_pages`` at the flagship
     PipelineConfig) — shared by ``q_quality_filter_pipeline`` and the
     goldens regression test (tests/test_pipeline.py), which pins
     per-source quantized model-score aggregates off this exact
     config."""
-    from dq.heuristics import HeuristicConfig
     from dq.pipeline import PipelineConfig, score_pages
 
     pages = _documents_as_webpages(spark, sf_dir)
-    cfg = PipelineConfig(
-        accept_langs=("en",),
-        heuristics=HeuristicConfig(min_words=30, min_stopword_frac=0.0,
-                                   min_mean_word_len=2.0),
-    )
+    cfg = PipelineConfig(accept_langs=("en",),
+                         heuristics=FLAGSHIP_HEURISTICS)
     return score_pages(spark, pages, cfg)
 
 
@@ -1543,15 +1544,11 @@ def q_pipeline_rules_only(spark, sf_dir):
     scrubbed-text fingerprints (scrub is the identity on this corpus —
     proven separately by scrubbed_fingerprints — so the md5 tallies pin
     the scrub stage's byte-round-trip inside the composition too)."""
-    from dq.heuristics import HeuristicConfig
     from dq.pipeline import PipelineConfig, score_pages
 
     pages = _documents_as_webpages(spark, sf_dir)
-    cfg = PipelineConfig(
-        heuristics=HeuristicConfig(min_words=30, min_stopword_frac=0.0,
-                                   min_mean_word_len=2.0),
-        enable_model_rules=False,
-    )
+    cfg = PipelineConfig(heuristics=FLAGSHIP_HEURISTICS,
+                         enable_model_rules=False)
     scored = score_pages(spark, pages, cfg)
     scored = scored.withColumn(
         "text_scrubbed", scrub_udf(F.when(F.col("keep"), F.col("text"))))
@@ -1569,12 +1566,12 @@ def q_pipeline_rules_only(spark, sf_dir):
                  F.sum(fp_num).alias("scrub_fp_sum")))
 
 
-# Same CTE skeleton as ORACLE_HEURISTICS but at the flagship pipeline's
-# HeuristicConfig (min_words=30, min_stopword_frac=0.0,
-# min_mean_word_len=2.0), extended with the dedup keeper window
-# (min(url) per exact text — the SQL mirror of the xxhash64-signature
-# groupBy+join, exact up to the documented U²/2⁶⁵ collision bound) and
-# md5 fingerprint tallies of the kept (scrub-identity) texts.
+# Same CTE skeleton as ORACLE_HEURISTICS but at FLAGSHIP_HEURISTICS
+# (min_words=30, min_stopword_frac=0.0, min_mean_word_len=2.0), extended
+# with the dedup keeper window (min(url) per exact text — the SQL mirror
+# of the dq.dedup.exact_dedup keeper join on text_signature, exact up to
+# the documented U²/2⁶⁵ collision bound) and md5 fingerprint tallies of
+# the kept (scrub-identity) texts.
 ORACLE_PIPELINE_RULES = f"""
 WITH pages AS (
   SELECT 'doc://' || source || '/' || CAST(doc_id AS VARCHAR) AS url,

@@ -5,11 +5,14 @@ this module is the engine-completeness extension: the same rule
 evaluation running continuously over an arriving webpages stream.
 
 Design:
-- **Same expressions, two runtimes.** ``score_stream`` applies the
-  identical heuristic Column expressions and broadcast-model UDFs used
-  by the batch pipeline (dq.heuristics / dq.models) to a streaming
-  DataFrame — Catalyst doesn't care, and keep/drop semantics cannot
-  drift between the two paths because they share the code.
+- **One scoring core, two runtimes.** ``score_stream`` calls the batch
+  pipeline's own definitions on a streaming DataFrame: rule scoring
+  (``dq.pipeline.score_rules`` under a ``PipelineConfig``), the keep
+  conjunction (``dq.heuristics.all_pass``), the rule tallies
+  (``dq.pipeline.rule_tallies``) and the dedup signature
+  (``dq.dedup.text_signature``). Catalyst doesn't care, and keep/drop
+  semantics cannot drift between the two paths because there is no
+  second copy.
 - **Event-time windows + watermark** for per-window rule metrics with
   bounded state: late pages beyond the watermark are dropped from the
   aggregation (the batch path has no such cutoff; the audit-table
@@ -18,8 +21,8 @@ Design:
   a landing directory and ``Trigger.AvailableNow`` for catch-up runs,
   which is also exactly how the tests drive it deterministically.
 - **Stateful dedup** via ``dropDuplicatesWithinWatermark`` on the text
-  signature — the streaming analog of the batch exact-dedup window
-  (state is bounded by the watermark instead of unbounded).
+  signature — the streaming analog of the batch keeper join (state is
+  bounded by the watermark instead of unbounded).
 """
 
 from __future__ import annotations
@@ -28,8 +31,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dq.heuristics import RULE_NAMES, HeuristicConfig, with_heuristics
-from dq.models import DEFAULT_PPL_THRESHOLD, make_langid_udf, make_perplexity_udf
+from dq.dedup import text_signature
+from dq.heuristics import all_pass
+from dq.pipeline import ROW_RULES, PipelineConfig, rule_tallies, score_rules
 
 
 def read_webpages_stream(spark: SparkSession, path: str,
@@ -45,37 +49,23 @@ def read_webpages_stream(spark: SparkSession, path: str,
 
 
 def score_stream(spark: SparkSession, pages: DataFrame,
-                 accept_langs: tuple[str, ...] = ("en",),
-                 ppl_threshold: float = DEFAULT_PPL_THRESHOLD,
-                 heuristics: HeuristicConfig | None = None,
+                 cfg: PipelineConfig | None = None,
                  watermark: str = "1 hour") -> DataFrame:
-    """Scored stream: rule_* booleans + keep, exactly the batch
+    """Scored stream: ROW_RULES booleans + keep, exactly the batch
     semantics minus the global dedup (streaming uses watermark-bounded
     dedup, see ``streaming_dedup``)."""
     df = pages.drop("html").withWatermark("warc_ts", watermark)
-    df = with_heuristics(df, "text", heuristics)
-    langid = make_langid_udf(spark)
-    ppl = make_perplexity_udf(spark)
-    df = df.withColumns({
-        "lang_pred": langid(F.col("text")),
-        "ppl": ppl(F.col("text")),
-    }).withColumns({
-        "rule_lang": F.col("lang_pred").isin(*accept_langs),
-        "rule_ppl": F.col("ppl") <= F.lit(ppl_threshold),
-    })
-    keep = F.lit(True)
-    for r in RULE_NAMES + ["rule_lang", "rule_ppl"]:
-        keep = keep & F.col(r)
-    return df.withColumn("keep", keep)
+    df = score_rules(spark, df, cfg or PipelineConfig())
+    return df.withColumn("keep", all_pass(ROW_RULES))
 
 
 def streaming_dedup(scored: DataFrame) -> DataFrame:
     """Watermark-bounded exact dedup: first arrival of a text signature
     wins; duplicates within the watermark horizon are dropped. State
     size is bounded by (docs per watermark window), not corpus size."""
-    sig = F.when(F.col("rule_non_empty"), F.xxhash64(F.col("text"))) \
-           .otherwise(F.xxhash64(F.col("url"), F.lit("nulltext")))
-    return (scored.withColumn("text_sig", sig)
+    return (scored
+            .withColumn("text_sig",
+                        text_signature(F.col("text"), F.col("url")))
             .dropDuplicatesWithinWatermark(["text_sig"]))
 
 
@@ -85,16 +75,12 @@ def windowed_rule_metrics(scored: DataFrame,
     the batch ``rule_metrics`` audit table. Watermark (already on the
     frame) bounds state; output mode 'append' emits each window once
     it is final."""
-    rules = RULE_NAMES + ["rule_lang", "rule_ppl"]
-    aggs = [F.sum(F.col(r).cast("long")).alias(f"pass__{r}") for r in rules]
-    aggs += [F.count(F.lit(1)).alias("total"),
-             F.sum(F.col("keep").cast("long")).alias("kept")]
     return (scored.groupBy(F.window("warc_ts", window).alias("w"))
-            .agg(*aggs)
+            .agg(*rule_tallies(ROW_RULES))
             .select(F.col("w.start").alias("window_start"),
                     F.col("w.end").alias("window_end"),
                     "total", "kept",
-                    *[F.col(f"pass__{r}") for r in rules]))
+                    *[F.col(f"pass__{r}") for r in ROW_RULES]))
 
 
 def running_key_stats(df: DataFrame, key_col: str = "source",

@@ -35,6 +35,8 @@ import sys
 
 sys.path.insert(0, ".")
 
+from bench import host_probe  # noqa: E402  (repo root is on sys.path)
+
 N_DOCS = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
 N_LOW = int(sys.argv[2]) if len(sys.argv) > 2 else 8
 REPS = int(sys.argv[3]) if len(sys.argv) > 3 else 4
@@ -140,17 +142,6 @@ class Level:
             self.proc.kill()
 
 
-def probe() -> float:
-    """Single-core speed probe — records host throttle state alongside
-    the measurement (the sandbox host's effective clock varies ~2x)."""
-    import time
-    t0 = time.time()
-    s = 0
-    for i in range(20_000_000):
-        s += i * i
-    return round(time.time() - t0, 2)
-
-
 _BURN = r"""
 import time, sys
 t0 = time.time(); n = 0
@@ -184,7 +175,7 @@ def cpu_ceiling() -> float:
 def main() -> None:
     if not os.path.exists(os.path.join(PAGES, "_SUCCESS")):
         materialize()
-    probe_before = probe()
+    probe_before = host_probe()
     low, high = Level(N_LOW), Level(N_HIGH)
     times = {N_LOW: [], N_HIGH: []}
     for rep in range(REPS):              # interleaved A/B pairs
@@ -194,7 +185,7 @@ def main() -> None:
     high.stop()
     ceiling = cpu_ceiling()
     results = {c: min(v) for c, v in times.items()}
-    probe_after = probe()
+    probe_after = host_probe()
     sys.stderr.write(f"all times: {times}\n")
     sys.stderr.write(f"probe before: {probe_before}s, after: {probe_after}s\n")
     sys.stderr.write(f"host cpu ceiling: {ceiling}\n")

@@ -55,6 +55,25 @@ def test_keep_drop_f1_vs_oracle(spark):
     assert f1 >= 0.99, (f1, tp, fp, fn)
 
 
+def test_score_pages_plan_shape(spark, tmp_path):
+    """The initial plan of ``score_pages`` (taken before any action):
+    ONE Arrow node runs token stats, langid and perplexity together,
+    and the keeper branch is a narrow (url, text) scan feeding one
+    map-side-combined exchange on ``text_sig`` — a keeper branch that
+    pulled a UDF in would show a second Arrow node."""
+    path = str(tmp_path / "pages")
+    webpages(spark, 200, num_partitions=2).write.parquet(path)
+    scored = score_pages(spark, spark.read.parquet(path))
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    arrow = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert len(arrow) == 1, plan
+    for udf in ("_token_stats_udf", "langid", "perplexity"):
+        assert udf in arrow[0], arrow[0]
+    assert plan.count("Exchange hashpartitioning(text_sig") == 1, plan
+    assert "partial_min" in plan and "Window" not in plan, plan
+    assert "ReadSchema: struct<url:string,text:string>" in plan, plan
+
+
 def test_flagship_goldens(spark):
     """Regression gate for the model-scored flagship (the one driver
     query with no SQL oracle): per-(source, rule) pass tallies AND

@@ -24,7 +24,13 @@ import math
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from dq.models import LANGID_MODEL, LM_MODEL
+from dq.models import (
+    _LANGID_CHUNK,
+    _PPL_CHUNK,
+    LANGID_MODEL,
+    LM_MODEL,
+    MAX_LANGID_BYTES,
+)
 from dq.scrub import (
     EMAIL_RE, EMAIL_TOKEN, IP_TOKEN, IPV4_RE, PHONE_RE, PHONE_TOKEN,
     TOXIC_RE, TOXIC_TOKEN, scrub_string,
@@ -89,3 +95,50 @@ def test_perplexity_batch_equals_per_doc(docs):
     assert len(got) == len(want)
     for g, w in zip(got, want):
         assert (math.isinf(g) and math.isinf(w)) or g == w, (g, w)
+
+
+def _chunk_spanning_docs():
+    """~500 deterministic docs whose bytes span several langid and
+    perplexity chunks: mixed languages and lengths, one doc larger than
+    a whole perplexity chunk, empties, Nones, letterless docs, and a
+    trailing run of empty slices."""
+    import random
+
+    from dq.vocab import AR_WORDS, DE_WORDS, EN_CONTENT, EN_STOPWORDS, FR_WORDS
+
+    rng = random.Random(20251003)
+    pools = [EN_STOPWORDS + EN_CONTENT, FR_WORDS, DE_WORDS, AR_WORDS,
+             ["zzqx", "qwv", "ü", "\U0001F600", "12", "--"]]
+    docs = []
+    for i in range(480):
+        if i % 37 == 5:
+            docs.append(rng.choice([None, "", "   ", "42 17 -- ??"]))
+            continue
+        words = rng.choices(rng.choice(pools), k=rng.randint(1, 900))
+        docs.append(" ".join(words))
+    big = " ".join(rng.choices(EN_STOPWORDS + EN_CONTENT,
+                               k=_PPL_CHUNK // 3))
+    docs.insert(250, big)
+    docs += ["", None, "", ""]          # trailing-empty suffix
+    return docs
+
+
+def test_batch_scorers_equal_per_doc_across_chunk_boundaries():
+    """The batch scorers process documents in byte-budgeted chunks
+    through reused scratch buffers; a batch spanning several chunks
+    (and one doc bigger than a chunk) still equals the per-doc scalar
+    paths, on a first call and again with the scratch already grown."""
+    docs = _chunk_spanning_docs()
+    nbytes = [len((d or "").encode()) for d in docs]
+    assert max(nbytes) > _PPL_CHUNK
+    assert sum(nbytes) > 3 * _PPL_CHUNK
+    assert sum(min(n, MAX_LANGID_BYTES) for n in nbytes) > 2 * _LANGID_CHUNK
+    want_lang = [LANGID_MODEL.predict(d) for d in docs]
+    want_ppl = [LM_MODEL.perplexity(d) for d in docs]
+    assert len(set(want_lang)) > 2
+    for _ in range(2):
+        assert LANGID_MODEL.predict_batch(docs) == want_lang
+        got = LM_MODEL.perplexity_batch(docs)
+        assert len(got) == len(want_ppl)
+        for g, w in zip(got, want_ppl):
+            assert (math.isinf(g) and math.isinf(w)) or g == w, (g, w)

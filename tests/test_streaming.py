@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dq import streaming
+from dq.heuristics import RULE_NAMES
 from dq.pipeline import PipelineConfig, score_pages
 from dq.synth import webpages
 
@@ -22,33 +23,34 @@ def landing(spark, tmp_path_factory):
 
 
 def test_stream_keep_matches_batch(spark, landing, tmp_path_factory):
-    """The streaming scorer and the batch scorer agree per url
-    (same expressions, two runtimes) — modulo dedup, which streaming
-    applies with bounded state instead of a global window."""
+    """The streaming scorer and the batch scorer agree per url on every
+    row-local rule, both model scores and keep (one scoring core, two
+    runtimes) — modulo dedup, which streaming applies with bounded
+    state instead of a global keeper join."""
     out_dir = str(tmp_path_factory.mktemp("out"))
     cp = str(tmp_path_factory.mktemp("cp"))
+    rules = RULE_NAMES + ["rule_lang", "rule_ppl"]
+    cols = rules + ["lang_pred", "ppl"]
     pages = streaming.read_webpages_stream(spark, landing)
     scored = streaming.score_stream(spark, pages)
-    q = (scored.select("url", "keep")
+    q = (scored.select("url", "keep", *cols)
          .writeStream.format("parquet")
          .option("path", out_dir).option("checkpointLocation", cp)
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(120)
 
-    stream_keep = {r["url"]: r["keep"]
-                   for r in spark.read.parquet(out_dir).collect()}
-
-    batch = score_pages(spark, spark.read.parquet(landing),
-                        PipelineConfig())
-    # compare on the pre-dedup rules: keep_stream == (batch keep ignoring
-    # rule_not_dup)
-    batch_keep_nodedup = {
-        r["url"]: all(r[c] for c in
-                      [c for c in batch.columns
-                       if c.startswith("rule_") and c != "rule_not_dup"])
-        for r in batch.collect()}
-    assert stream_keep == batch_keep_nodedup
-    assert any(stream_keep.values()) and not all(stream_keep.values())
+    stream = {r["url"]: r for r in spark.read.parquet(out_dir).collect()}
+    batch = {r["url"]: r for r in
+             score_pages(spark, spark.read.parquet(landing),
+                         PipelineConfig()).collect()}
+    assert stream.keys() == batch.keys()
+    for url, got in stream.items():
+        want = batch[url]
+        assert [got[c] for c in cols] == [want[c] for c in cols], url
+        # keep_stream == batch keep ignoring rule_not_dup
+        assert got["keep"] == all(want[c] for c in rules), url
+    keeps = [r["keep"] for r in stream.values()]
+    assert any(keeps) and not all(keeps)
 
 
 def test_windowed_metrics_availablenow(spark, landing, tmp_path_factory):
@@ -79,6 +81,8 @@ def test_streaming_dedup_bounded(spark, tmp_path_factory):
              "identical text " * 10, "en") for i in range(5)]
     rows += [(f"v{i}", ts + dt.timedelta(minutes=i), None,
               f"unique text number {i} " * 10, "en") for i in range(3)]
+    rows += [("n0", ts, None, None, "en"),
+             ("n1", ts + dt.timedelta(minutes=1), None, "   ", "en")]
     spark.createDataFrame(
         rows, "url string, warc_ts timestamp, html binary, text string, "
               "lang string").write.mode("overwrite").parquet(base)
@@ -93,9 +97,11 @@ def test_streaming_dedup_bounded(spark, tmp_path_factory):
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(120)
     got = spark.read.parquet(out).collect()
-    # 5 identical texts collapse to 1 survivor; 3 unique all survive
+    # 5 identical texts collapse to 1 survivor; 3 unique all survive;
+    # null/blank texts key by url, so both survive
     sigs = [r["text_sig"] for r in got]
-    assert len(sigs) == len(set(sigs)) == 4
+    assert len(sigs) == len(set(sigs)) == 6
+    assert {"n0", "n1"} <= {r["url"] for r in got}
 
 
 def test_running_key_stats_state_survives_restart(spark, tmp_path_factory):
