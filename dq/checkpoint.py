@@ -61,4 +61,7 @@ def mark_done(spark: SparkSession, store: AuditStore, scope: str,
         return
     rows = [(scope, execution_id, p, "done", completed_at)
             for p in partition_values]
-    store.append("checkpoint", local_frame(spark, rows, CHECKPOINT_SCHEMA))
+    # one file per run: the local relation would otherwise be split
+    # over defaultParallelism files
+    store.append("checkpoint",
+                 local_frame(spark, rows, CHECKPOINT_SCHEMA).coalesce(1))
