@@ -27,11 +27,8 @@ Write disciplines:
   ``run_checks_job`` / ``run_pipeline`` regardless of where they died.
 
 Layout: a writer emits one file per partition directory per task that
-holds rows of it. ``run_pipeline`` clusters its persisted scored frame by
-``partition_value`` before the writes, so ``docs``, ``lineage``,
-``rule_metrics`` and ``row_count_history`` get one file per day per table
-while a day fits one task, and ``mark_done`` writes a run's checkpoint
-rows as one file.
+holds rows of it; how a job's frames are partitioned decides the file
+count.
 
 Distributed writes — the reference's batched psycopg2 INSERTs
 (batch_size=1000, ``config/settings.py:97``) become executor-parallel

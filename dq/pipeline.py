@@ -22,19 +22,13 @@ alike:
 Scale shape (the plan at 100 TB):
 - one scan of the input; heuristics + UDF scoring are row-local (no
   shuffle), Arrow-batched where Python is required;
-- two data-wide exchanges. The first is the dedup keeper join on the
-  64-bit text signature — a map-side-combined aggregate + join back, so
-  a skewed duplicate key is AQE-splittable and a small keeper table
+- exactly ONE data-wide exchange: the dedup keeper join on the 64-bit
+  text signature — a map-side-combined aggregate + join back, so a
+  skewed duplicate key is AQE-splittable and a small keeper table
   broadcasts (null/empty texts get a per-row signature so they cannot
-  form a skewed hash bucket either way). The second is a narrow one:
-  the scored frame, without the raw text and with scrubbed text for
-  kept docs only, is rebalanced by ``partition_value`` before it is
-  persisted. It replaces the exchanges the per-day aggregations (and a
-  hash-distributed catalog write) would otherwise each run, and it
-  gives every day-partitioned audit table one file per day;
-- lineage/metrics/docs/row-count history derive from one persisted
-  scored frame — MEMORY_AND_DISK locally, a staged Iceberg table on a
-  cluster;
+  form a skewed hash bucket either way);
+- lineage/metrics/docs derive from one persisted scored frame —
+  MEMORY_AND_DISK locally, a staged Iceberg table on a cluster;
 - resume anti-join and metrics aggregations touch only tiny frames.
 """
 
@@ -204,11 +198,6 @@ def run_pipeline(
                           F.when(F.col("keep"),
                                  F.col("text_scrubbed") != F.col("text")))
               .drop("text"))
-    # cluster by day before the cache: every day lands in one task, so
-    # each day-partitioned audit table gets one file per day, and the
-    # per-day aggregations reuse this partitioning with no exchange of
-    # their own (rebalance, unlike repartition, may split a skewed day)
-    scored = scored.hint("rebalance", "partition_value")
     scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
 
     docs = (scored.filter("keep")

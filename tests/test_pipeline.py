@@ -201,45 +201,6 @@ def test_run_job_keeps_explicit_zero_ppl_threshold():
     assert isinstance(cfg(), PipelineConfig)
 
 
-def _parquet_files_per_dir(root):
-    """{leaf directory: parquet file count} under an audit table path."""
-    counts = {}
-    for d, _dirs, files in os.walk(root):
-        n = sum(f.endswith(".parquet") for f in files)
-        if n:
-            counts[os.path.relpath(d, root)] = n
-    return counts
-
-
-def test_audit_layout_one_file_per_day(spark, tmp_path):
-    """The persisted scored frame is clustered by day, so every
-    day-partitioned audit table gets one file per day from a multi-file
-    input, the run's checkpoint rows are one file, and the per-day
-    aggregations read the cache with no exchange of their own."""
-    path = str(tmp_path / "pages")
-    webpages(spark, 400, num_partitions=3).write.parquet(path)
-    pages = spark.read.parquet(path)
-    assert len(pages.inputFiles()) >= 2
-    days = pages.select(F.to_date("warc_ts")).distinct().count()
-    assert days > 1
-
-    store = AuditStore(str(tmp_path / "audit"))
-    out = run_pipeline(spark, pages, "exec1", RUN_TS, store=store)
-    for table in ("docs", "lineage", "rule_metrics", "row_count_history"):
-        counts = _parquet_files_per_dir(store.path(table))
-        assert set(counts.values()) == {1}, (table, counts)
-        if table != "docs":         # docs holds kept days only
-            assert len(counts) == days, (table, counts)
-        if table != "row_count_history":
-            assert all(d.startswith("partition_value=") for d in counts), counts
-    assert sum(_parquet_files_per_dir(store.path("checkpoint")).values()) == 1
-
-    plan = out["metrics"]._jdf.queryExecution().executedPlan().toString()
-    above_cache = plan.split("InMemoryTableScan")[0]
-    assert "InMemoryTableScan" in plan and "Exchange" not in above_cache, plan
-    out["scored"].unpersist()
-
-
 class _CrashingStore(AuditStore):
     """Path-mode store that raises right after its k-th
     ``overwrite_partitions`` call has committed."""
@@ -269,13 +230,16 @@ def test_crash_after_each_audit_write_reruns_to_clean_tables(spark, tmp_path):
     """Crash-point matrix: a run that dies after its k-th partition
     overwrite (k = 1..4, all before ``mark_done``) and is rerun under the
     same execution id leaves the same five audit tables as a clean run,
-    with one ``done`` checkpoint row per day."""
+    with one ``done`` checkpoint row per day, written as one file."""
     pages = webpages(spark, 200, num_partitions=2)
     clean = AuditStore(str(tmp_path / "clean"))
     run_pipeline(spark, pages, "exec1", RUN_TS, store=clean)["scored"].unpersist()
     want = _audit_rows(spark, clean)
     days = pages.select(F.to_date("warc_ts")).distinct().count()
     assert len(want["checkpoint"]) == days
+    # mark_done writes a run's checkpoint rows as one file
+    assert sum(f.endswith(".parquet") for _d, _s, files
+               in os.walk(clean.path("checkpoint")) for f in files) == 1
 
     for k in range(1, 5):
         base = str(tmp_path / f"crash{k}")
